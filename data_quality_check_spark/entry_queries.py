@@ -20,8 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from data_quality_check_spark import oracles as _OR
-from data_quality_check_spark.operators import profiler as P
 from data_quality_check_spark.plans.quality_scores import (
+    FAKE_NULLS,
     ScoreSpec,
     scores_df,
     scores_duck_sql,
@@ -312,7 +312,7 @@ def q_outlier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ───────────── A13/A11/A12: standardization stats per string column ─────────────
 
 _DOC_STR = ["text", "lang", "source"]
-_FAKES = ", ".join(f"'{x}'" for x in P.FAKE_NULLS)
+_FAKES = ", ".join(f"'{x}'" for x in FAKE_NULLS)
 
 _STD_SQL = "SELECT " + ", ".join(
     f'count("{c}") AS "nn__{c}", '
@@ -333,7 +333,7 @@ def q_standardization_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         aggs += [
             F.count(col).alias(f"nn__{c}"),
             F.count_if(col.isNotNull() & (col != F.trim(col))).alias(f"ws__{c}"),
-            F.count_if(folded.isin(P.FAKE_NULLS)).alias(f"fn__{c}"),
+            F.count_if(folded.isin(FAKE_NULLS)).alias(f"fn__{c}"),
             F.count_distinct(col).alias(f"nu__{c}"),
             F.count_distinct(folded).alias(f"nl__{c}"),
         ]

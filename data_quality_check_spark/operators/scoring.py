@@ -4,8 +4,8 @@ Formula parity with the reference (semantics only, re-derived — see SURVEY.md 
 A18/A19; reference: engine.py:353-357 weights, engine.py:387-389 global score,
 engine.py:405/415/426-431/452/473/499/518/543 per-dimension formulas,
 engine.py:555 per-column combiner). All score math here is plain float algebra over
-already-aggregated metrics; the heavy lifting happens in `operators.profiler` as a
-fused Spark plan.
+already-aggregated metrics; the heavy lifting happens in
+`plans.quality_scores.metric_plan` as one fused Spark plan.
 """
 
 from __future__ import annotations

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from data_quality_check_spark.operators.profiler import FAKE_NULLS
+from data_quality_check_spark.plans.quality_scores import FAKE_NULLS
 
 MIN_CAPTION_CHARS = 5
 MAX_CAPTION_CHARS = 1024

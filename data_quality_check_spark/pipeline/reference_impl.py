@@ -18,7 +18,6 @@ import pandas as pd
 
 from data_quality_check_spark.functions.scrub import scrub_text
 from data_quality_check_spark.functions.textmodel import default_model
-from data_quality_check_spark.operators.profiler import FAKE_NULLS
 from data_quality_check_spark.pipeline import codecs
 from data_quality_check_spark.pipeline.heuristics import (
     ALPHA_CLASS,
@@ -32,6 +31,7 @@ from data_quality_check_spark.pipeline.heuristics import (
     MIN_CAPTION_CHARS,
     REPETITION_MIN_TOKENS,
 )
+from data_quality_check_spark.plans.quality_scores import FAKE_NULLS
 
 _ALPHA_RX = re.compile(ALPHA_CLASS)
 _WS_RX = re.compile(f"[{WS_CHARS}]+")  # ASCII class == Java \\s, NOT Python unicode \\s

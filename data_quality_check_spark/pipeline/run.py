@@ -704,6 +704,19 @@ def optional_out_cols(scored: DataFrame, cfg: FilterConfig, out_cols: "list[int]
     return scored
 
 
+# Compatibility table for stored fingerprints: the value each facet had
+# before it was added to `output_schema_fingerprint` (every facet was OFF). A
+# fingerprint written by an earlier code revision lacks the later-added keys;
+# each missing key reads as its entry here, so upgrading the code never
+# refuses a resume whose config and schema are in fact unchanged. Adding a
+# facet means adding its pre-upgrade value here.
+_FINGERPRINT_DEFAULTS: dict = {
+    "split_labels": [],
+    "assign_aspect_buckets": False,
+    "ppl_bucket_labels": [],
+}
+
+
 def output_schema_fingerprint(cfg: FilterConfig) -> dict:
     """The config facets that change the OUTPUT SCHEMA (not just row
     verdicts). Persisted into the checkpoint on first commit and enforced on
@@ -735,13 +748,22 @@ def _check_output_schema_fingerprint(checkpoint_dir: str, cfg: FilterConfig) -> 
     if os.path.exists(path):
         with open(path) as f:
             prev = json.load(f)
-        # fingerprints written by earlier code revisions lack later-added
-        # facets; a missing key means that facet was OFF (its pre-upgrade
-        # value) — the same missing-reads-as-default rule as the artifact
-        # format_version stamps, so upgrading the code never refuses a
-        # resume whose config and schema are in fact unchanged
-        prev = {**{k: ([] if isinstance(v, list) else False) for k, v in fp.items()},
-                **prev}
+        problems = [
+            f"unknown key {k!r}"
+            if k not in _FINGERPRINT_DEFAULTS
+            else f"key {k!r} holds {type(v).__name__}, expected "
+            f"{type(_FINGERPRINT_DEFAULTS[k]).__name__}"
+            for k, v in sorted(prev.items())
+            if k not in _FINGERPRINT_DEFAULTS or type(v) is not type(_FINGERPRINT_DEFAULTS[k])
+        ]
+        if problems:
+            raise ValueError(
+                f"unreadable output-schema fingerprint {path}: "
+                f"{'; '.join(problems)}. It was written by another code "
+                "revision or edited; resume with the revision that wrote it, "
+                "or start a fresh checkpoint+output."
+            )
+        prev = {**_FINGERPRINT_DEFAULTS, **prev}
         if prev != fp:
             raise ValueError(
                 "output-schema config changed mid-checkpoint: committed "

@@ -1,29 +1,71 @@
-"""All-Spark quality-score plans + DuckDB oracle SQL twins.
+"""The one quality-metric implementation, its all-Spark score plans, and their
+DuckDB oracle SQL twins.
 
-`profile()` (operators/profiler.py) collects fused metric rows and finishes the score
-algebra on the driver. This module instead expresses the *entire* computation —
-metrics **and** score algebra — as one lazy Spark plan returning a one-row (or
-one-row-per-group) DataFrame. That makes the scores:
+`metric_plan` is the only place the 9-dimension metric row is built: every
+conditional/distinct count, the p25/p75 quantiles and the 3·IQR-fence outlier
+counts, in at most 3 scans of the input inside ONE action. Two consumers finish
+it differently:
 
-  * checkable by the driver's DuckDB oracle (`scores_duck_sql` emits ANSI SQL with
-    identical semantics, generated from the same metric spec so names/semantics
-    can't drift), and
-  * usable as per-partition metric *tables* at scale (grouped variant) with zero
-    driver-side math — the north_rule's per-partition keep/drop/scrub metrics.
+  * `scores_df` / `grouped_scores_df` keep the *entire* computation — metrics
+    **and** score algebra (`_score_exprs`) — as one lazy Spark plan returning a
+    one-row (or one-row-per-group) DataFrame. `scores_duck_sql` emits ANSI SQL
+    with identical semantics, generated from the same `ScoreSpec` so names and
+    semantics can't drift, which makes the scores checkable by a DuckDB oracle.
+  * `operators.profiler.profile` collects the single metric row and finishes the
+    score algebra, issues and per-column scores in Python (`scoring.py`).
+
+The two score algebras are kept on purpose. `scoring.py` rounds with Python's
+`round`, which rounds the exact binary double, for parity with the reference;
+`_score_exprs` rounds the shortest decimal repr HALF_UP (Spark's `round`), the
+contract its DuckDB twin reproduces. They can differ on a .X5 tie: a
+completeness of 98.55 (stored as 98.5499…) is 98.6 here and 98.5 in
+`scoring.py` (tests/test_properties.py pins the Spark/DuckDB side).
 
 Score formula semantics follow the reference (see operators/scoring.py citations).
-Max 3 scans of the input, same as `profile()`.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from data_quality_check_spark.operators import profiler as P
 from data_quality_check_spark.operators.scoring import WEIGHTS
 from data_quality_check_spark.session import parallelize_scan
+
+# Canonical validation regexes (engine.py:477-478; the Spark engine's phone pattern
+# is taken as canonical over the pandas variant — SURVEY.md §1.2).
+EMAIL_RE = r"^[a-zA-Z0-9._%+\-]+@[a-zA-Z0-9.\-]+\.[a-zA-Z]{2,}$"
+# whitespace spelled as an explicit class, not \s: Java's \s includes \x0B
+# while RE2's (the DuckDB twin) does not — the same Java∩RE2 rule
+# pipeline/heuristics.py applies to caption whitespace
+PHONE_RE = r"^\+?[\d][\d \t\n\r\f\-\.\(\)]{6,20}$"
+
+# Values treated as "fake nulls" after lower(trim(...)) (engine.py:521).
+FAKE_NULLS = ["n/a", "na", "null", "none", "-", "--", "unknown", "inconnu", "?", "nan", "nd"]
+
+# Column-name keywords that mark a numeric column as must-be-non-negative
+# (engine.py:438).
+NEGATIVE_KEYWORDS = ["price", "prix", "amount", "montant", "age", "qty", "quantity", "stock"]
+
+_NUMERIC_TYPES = (T.DoubleType, T.FloatType, T.IntegerType, T.LongType)
+
+# Case-variance penalty applies when 2 <= distinct <= 50 (engine.py:539).
+CASE_VARIANT_MIN, CASE_VARIANT_MAX = 2, 50
+
+IQR_FENCE_K = 3.0  # fences at Q1 - 3·IQR / Q3 + 3·IQR (engine.py:466)
+
+
+def numeric_columns(df: DataFrame) -> list[str]:
+    return [f.name for f in df.schema.fields if isinstance(f.dataType, _NUMERIC_TYPES)]
+
+
+def string_columns(df: DataFrame) -> list[str]:
+    return [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
+
+
+def _negative_check_cols(numeric: list[str]) -> list[str]:
+    return [c for c in numeric if any(k in c.lower() for k in NEGATIVE_KEYWORDS)]
 
 
 @dataclass
@@ -66,17 +108,15 @@ class ScoreSpec:
         numeric, strings = [], []
         for f in schema:
             # restricted to >=32-bit so this constructor classifies EXACTLY
-            # like from_df/profiler._NUMERIC_TYPES (Int/Long/Float/Double) —
-            # an int16 column marked numeric here but skipped by the Spark
-            # plan would give the generated oracle extra metrics to disagree on
+            # like from_df/_NUMERIC_TYPES (Int/Long/Float/Double) — an int16
+            # column marked numeric here but skipped by the Spark plan would
+            # give the generated oracle extra metrics to disagree on
             if (pat.is_integer(f.type) or pat.is_floating(f.type)) and f.type.bit_width >= 32:
                 numeric.append(f.name)
             elif pat.is_string(f.type) or pat.is_large_string(f.type):
                 strings.append(f.name)
         spec = cls(columns=list(schema.names), numeric_cols=numeric, string_cols=strings)
-        spec.neg_check_cols = [
-            c for c in numeric if any(k in c.lower() for k in P.NEGATIVE_KEYWORDS)
-        ]
+        spec.neg_check_cols = _negative_check_cols(numeric)
         for k, v in overrides.items():
             setattr(spec, k, v)
         return spec
@@ -85,12 +125,10 @@ class ScoreSpec:
     def from_df(cls, df: DataFrame, **overrides) -> "ScoreSpec":
         spec = cls(
             columns=list(df.columns),
-            numeric_cols=P.numeric_columns(df),
-            string_cols=P.string_columns(df),
+            numeric_cols=numeric_columns(df),
+            string_cols=string_columns(df),
         )
-        spec.neg_check_cols = [
-            c for c in spec.numeric_cols if any(k in c.lower() for k in P.NEGATIVE_KEYWORDS)
-        ]
+        spec.neg_check_cols = _negative_check_cols(spec.numeric_cols)
         for k, v in overrides.items():
             setattr(spec, k, v)
         return spec
@@ -100,10 +138,16 @@ class ScoreSpec:
 
 
 def _metric_aggs(spec: ScoreSpec) -> list[Column]:
-    """Pass-1 aggregates (metrics only; no quantiles) from the spec."""
+    """Every metric except the quantile-dependent ones, fused into one aggregate.
+
+    Emits the superset both consumers read: `nd__<c>` (distinct count of a
+    non-string column) feeds only `profile`'s per-column scores, and Catalyst's
+    column pruning drops it from the `scores_df` plans, which never reference it."""
     a: list[Column] = [F.count(F.lit(1)).alias("row_count")]
     for c in spec.columns:
         a.append(F.count_if(F.col(c).isNull()).alias(f"nulls__{c}"))
+    # struct() makes the full-row distinct count null-safe: a struct of all
+    # columns is itself never null (duplicates = row_count - distinct_rows)
     a.append(F.count_distinct(F.struct(*[F.col(c) for c in spec.columns])).alias("distinct_rows"))
     for c in spec.neg_check_cols:
         a.append(F.count_if(F.col(c) < 0).alias(f"neg__{c}"))
@@ -118,22 +162,32 @@ def _metric_aggs(spec: ScoreSpec) -> list[Column]:
     for c in spec.email_cols:
         col = F.col(c).cast("string")
         a.append(F.count(col).alias(f"emailc__{c}"))
-        a.append(F.count_if(col.isNotNull() & ~col.rlike(P.EMAIL_RE)).alias(f"emailv__{c}"))
+        a.append(F.count_if(col.isNotNull() & ~col.rlike(EMAIL_RE)).alias(f"emailv__{c}"))
     for c in spec.phone_cols:
         col = F.col(c).cast("string")
         a.append(F.count(col).alias(f"phonec__{c}"))
-        a.append(F.count_if(col.isNotNull() & ~col.rlike(P.PHONE_RE)).alias(f"phonev__{c}"))
+        a.append(F.count_if(col.isNotNull() & ~col.rlike(PHONE_RE)).alias(f"phonev__{c}"))
     for c in spec.string_cols:
         col, folded = F.col(c), F.lower(F.trim(F.col(c)))
         a.append(F.count(col).alias(f"strc__{c}"))
         a.append(F.count_if(col.isNotNull() & (col != F.trim(col))).alias(f"ws__{c}"))
-        a.append(F.count_if(folded.isin(P.FAKE_NULLS)).alias(f"fn__{c}"))
+        a.append(F.count_if(folded.isin(FAKE_NULLS)).alias(f"fn__{c}"))
         a.append(F.count_distinct(col).alias(f"nu__{c}"))
         a.append(F.count_distinct(folded).alias(f"nl__{c}"))
     for c in spec.date_cols:
-        # try_to_timestamp: ANSI-safe null-on-malformed (the DuckDB twin already
-        # uses try_cast); the score expr consumes it JVM-side, no collect() tz risk
-        a.append(F.max(F.try_to_timestamp(F.col(c))).alias(f"maxd__{c}"))
+        # try_to_timestamp, NOT to_timestamp: under Spark 4's default ANSI mode
+        # one malformed value in a detector-admitted date column would abort the
+        # whole fused pass (the DuckDB twin uses try_cast). Emitted as epoch
+        # MICROSECONDS (a long): collect() renders TimestampType through the
+        # local OS timezone, epoch math is timezone-free AFTER the parse. The
+        # parse itself reads wall-clock strings in spark.sql.session.timeZone
+        # while `as_of`/`now` are naive UTC, so the session must run UTC
+        # (session.get_spark pins it).
+        a.append(F.unix_micros(F.max(F.try_to_timestamp(F.col(c)))).alias(f"maxd__{c}"))
+    strset = set(spec.string_cols)
+    for c in spec.columns:
+        if c not in strset:  # string columns reuse nu__
+            a.append(F.count_distinct(F.col(c)).alias(f"nd__{c}"))
     return a
 
 
@@ -146,13 +200,6 @@ def _quantile_aggs(spec: ScoreSpec) -> list[Column]:
     ]
 
 
-def _unpack_quantiles(qdf: DataFrame, spec: ScoreSpec) -> DataFrame:
-    return qdf.select(
-        *[F.col(f"q__{c}")[0].alias(f"q1__{c}") for c in spec.numeric_cols],
-        *[F.col(f"q__{c}")[1].alias(f"q3__{c}") for c in spec.numeric_cols],
-    )
-
-
 def _outlier_aggs_from_fences(spec: ScoreSpec) -> list[Column]:
     """Outlier counts where fences come from joined q1__/q3__ columns."""
     a = []
@@ -161,10 +208,38 @@ def _outlier_aggs_from_fences(spec: ScoreSpec) -> list[Column]:
         iqr = q3 - q1
         a.append(
             F.count_if(
-                (F.col(c) < q1 - P.IQR_FENCE_K * iqr) | (F.col(c) > q3 + P.IQR_FENCE_K * iqr)
+                (F.col(c) < q1 - IQR_FENCE_K * iqr) | (F.col(c) > q3 + IQR_FENCE_K * iqr)
             ).alias(f"out__{c}")
         )
     return a
+
+
+def metric_plan(df: DataFrame, spec: ScoreSpec, group_cols: list[str] | None = None) -> DataFrame:
+    """The metric row(s) for `spec`: every `_metric_aggs` column plus
+    q1__/q3__/out__ per numeric column — one row, or one per `group_cols` key.
+
+    At most 3 scans of `df` inside one action: the metrics aggregate, joined with
+    the outlier aggregate, which counts each row against its (group's) fences by
+    joining a broadcast of the small quantile aggregate back onto the rows.
+    Ungrouped, both joins are broadcast cross joins of one-row sides. Grouped,
+    a group with a NULL key is dropped by the inner joins when numeric columns
+    are present (the DuckDB twin's USING joins drop it too)."""
+    g = list(group_cols or [])
+    p1 = df.groupBy(*g).agg(*_metric_aggs(spec))
+    if not spec.numeric_cols:
+        return p1
+    q = df.groupBy(*g).agg(*_quantile_aggs(spec)).select(
+        *g,
+        *[F.col(f"q__{c}")[0].alias(f"q1__{c}") for c in spec.numeric_cols],
+        *[F.col(f"q__{c}")[1].alias(f"q3__{c}") for c in spec.numeric_cols],
+    )
+    rows = df.join(F.broadcast(q), g) if g else df.crossJoin(F.broadcast(q))
+    o = rows.groupBy(*g).agg(
+        *_outlier_aggs_from_fences(spec),
+        *[F.first(f"q1__{c}").alias(f"q1__{c}") for c in spec.numeric_cols],
+        *[F.first(f"q3__{c}").alias(f"q3__{c}") for c in spec.numeric_cols],
+    )
+    return p1.join(o, g) if g else p1.crossJoin(F.broadcast(o))
 
 
 def _r1(c: Column) -> Column:
@@ -193,9 +268,7 @@ def _score_exprs(spec: ScoreSpec) -> list[Column]:
         as_of = F.unix_micros(F.to_timestamp(F.lit(spec.as_of)))
         per_col = []
         for c in spec.date_cols:
-            lag_h = (as_of - F.unix_micros(F.col(f"maxd__{c}").cast("timestamp"))).cast(
-                "double"
-            ) / 3.6e9
+            lag_h = (as_of - F.col(f"maxd__{c}")).cast("double") / 3.6e9
             per_col.append(
                 F.when(
                     F.col(f"maxd__{c}").isNotNull(),
@@ -285,7 +358,7 @@ def _score_exprs(spec: ScoreSpec) -> list[Column]:
         for c in spec.string_cols:
             nu, nl = F.col(f"nu__{c}"), F.col(f"nl__{c}")
             penalty = F.when(
-                (nu >= P.CASE_VARIANT_MIN) & (nu <= P.CASE_VARIANT_MAX) & (nl < nu),
+                (nu >= CASE_VARIANT_MIN) & (nu <= CASE_VARIANT_MAX) & (nl < nu),
                 (nu - nl) * 10,
             ).otherwise(0)
             sv = sv + F.col(f"ws__{c}") + F.col(f"fn__{c}") + penalty
@@ -317,56 +390,18 @@ def scores_df(df: DataFrame, spec: ScoreSpec | None = None) -> DataFrame:
     spec = spec or ScoreSpec.from_df(df)
     # This plan scans `df` up to 3x inside one action; an under-split input
     # (single parquet row group) would run every scan on one core.
-    df = parallelize_scan(df)
-    p1 = df.agg(*_metric_aggs(spec))
-    if spec.numeric_cols:
-        q = _unpack_quantiles(df.agg(*_quantile_aggs(spec)), spec)
-        o = df.crossJoin(F.broadcast(q)).agg(
-            *_outlier_aggs_from_fences(spec),
-            *[F.first(f"q1__{c}").alias(f"q1__{c}") for c in spec.numeric_cols],
-            *[F.first(f"q3__{c}").alias(f"q3__{c}") for c in spec.numeric_cols],
-        )
-        joined = p1.crossJoin(F.broadcast(o))
-    else:
-        joined = p1
-    return joined.select(*_score_exprs(spec))
+    return metric_plan(parallelize_scan(df), spec).select(*_score_exprs(spec))
 
 
 def grouped_scores_df(
     df: DataFrame, group_cols: list[str], spec: ScoreSpec | None = None
 ) -> DataFrame:
-    """Per-group 9-dimension score table: one row per group key — the full
-    (quantile-inclusive) variant of `profiler.profile_grouped`, and the shape
-    the north rule's per-partition metric tables take.
-
-    Same ≤3-scan structure as `scores_df`, each pass a `groupBy(group_cols)`:
-    metrics, per-group quantiles, then per-group IQR-fence outlier counts with
-    the (small, one row per group) quantile table broadcast back onto the rows.
-    Groups with a NULL key are dropped by the inner metric↔outlier join, in both
-    engines, when numeric columns are present."""
+    """Per-group 9-dimension score table: one row per group key — the shape the
+    north rule's per-partition metric tables take. Same ≤3-scan `metric_plan`
+    as `scores_df`, each pass a `groupBy(group_cols)`."""
     gcols = list(group_cols)
     spec = spec or ScoreSpec.from_df(df.drop(*gcols))
-    df = parallelize_scan(df)
-    p1 = df.groupBy(*gcols).agg(*_metric_aggs(spec))
-    if spec.numeric_cols:
-        q = df.groupBy(*gcols).agg(*_quantile_aggs(spec)).select(
-            *gcols,
-            *[F.col(f"q__{c}")[0].alias(f"q1__{c}") for c in spec.numeric_cols],
-            *[F.col(f"q__{c}")[1].alias(f"q3__{c}") for c in spec.numeric_cols],
-        )
-        o = (
-            df.join(F.broadcast(q), gcols)
-            .groupBy(*gcols)
-            .agg(
-                *_outlier_aggs_from_fences(spec),
-                *[F.first(f"q1__{c}").alias(f"q1__{c}") for c in spec.numeric_cols],
-                *[F.first(f"q3__{c}").alias(f"q3__{c}") for c in spec.numeric_cols],
-            )
-        )
-        joined = p1.join(o, gcols)
-    else:
-        joined = p1
-    return joined.select(*gcols, *_score_exprs(spec))
+    return metric_plan(parallelize_scan(df), spec, gcols).select(*gcols, *_score_exprs(spec))
 
 
 # ─────────────────────────── DuckDB oracle side ───────────────────────────
@@ -402,7 +437,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
             f'count(*) FILTER (WHERE "{ca}" IS NOT NULL AND "{cb}" IS NOT NULL '
             f'AND "{ca}" {op} "{cb}") AS "corrv__{i}"'
         )
-    for kind, rx, lst in (("email", P.EMAIL_RE, spec.email_cols), ("phone", P.PHONE_RE, spec.phone_cols)):
+    for kind, rx, lst in (("email", EMAIL_RE, spec.email_cols), ("phone", PHONE_RE, spec.phone_cols)):
         for c in lst:
             s = f'CAST("{c}" AS VARCHAR)'
             m.append(f'count({s}) AS "{kind}c__{c}"')
@@ -413,7 +448,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
     for c in spec.string_cols:
         col = f'"{c}"'
         folded = f"lower(trim({col}))"
-        fakes = ", ".join(f"'{x}'" for x in P.FAKE_NULLS)
+        fakes = ", ".join(f"'{x}'" for x in FAKE_NULLS)
         m.append(f'count({col}) AS "strc__{c}"')
         m.append(f'count(*) FILTER (WHERE {col} IS NOT NULL AND {col} <> trim({col})) AS "ws__{c}"')
         m.append(f'count(*) FILTER (WHERE {folded} IN ({fakes})) AS "fn__{c}"')
@@ -429,7 +464,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
 
     o = []
     for c in spec.numeric_cols:
-        k = _d(P.IQR_FENCE_K)
+        k = _d(IQR_FENCE_K)
         o.append(
             f'count(*) FILTER (WHERE t."{c}" < q."q1__{c}" - {k}*(q."q3__{c}"-q."q1__{c}") '
             f'OR t."{c}" > q."q3__{c}" + {k}*(q."q3__{c}"-q."q1__{c}")) AS "out__{c}"'
@@ -543,7 +578,7 @@ def scores_duck_sql(table: str, spec: ScoreSpec, group_cols: list[str] | None = 
         terms = []
         for c in spec.string_cols:
             pen = (
-                f'CASE WHEN "nu__{c}" >= {P.CASE_VARIANT_MIN} AND "nu__{c}" <= {P.CASE_VARIANT_MAX} '
+                f'CASE WHEN "nu__{c}" >= {CASE_VARIANT_MIN} AND "nu__{c}" <= {CASE_VARIANT_MAX} '
                 f'AND "nl__{c}" < "nu__{c}" THEN ("nu__{c}" - "nl__{c}") * 10 ELSE 0 END'
             )
             terms.append(f'"ws__{c}" + "fn__{c}" + {pen}')

@@ -1116,6 +1116,13 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
     base = df.select("vec_id", "embedding")
     io = TableIO(spark, warehouse=str(tmp_path / "wh"))
     SIM.ivf_build_index(io, base, "ann", n_centroids=4)
+    DD.release_pins()  # start from an empty global pin list
+
+    def maintain(increment, **kw):
+        # every call frees its own pins: nothing is left on the global list
+        rep = SIM.ivf_maintenance(io, increment, "ann", **kw)
+        assert DD.release_pins() == 0
+        return rep
 
     def check_index_answers(corpus_df):
         # nprobe == n_centroids probes every cell: the indexed answer must
@@ -1128,6 +1135,7 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, want.collect())
         )
+        DD.release_pins()  # the indexed query's own pins
 
     # in-distribution increment: same 4 clusters, new ids
     in_rows = [
@@ -1140,10 +1148,10 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
     in_df = spark.createDataFrame(in_rows, "vec_id long, embedding array<double>")
     # report mode folds NOTHING even below the threshold (a dry run that
     # appended would double-store the increment when the real call follows)
-    dry0 = SIM.ivf_maintenance(io, in_df, "ann", psi_threshold=0.2, action="report")
+    dry0 = maintain(in_df, psi_threshold=0.2, action="report")
     assert not dry0["drifted"] and dry0["action_taken"] == "reported"
     assert io.read("ann.vectors").count() == 120
-    rep = SIM.ivf_maintenance(io, in_df, "ann", psi_threshold=0.2)
+    rep = maintain(in_df, psi_threshold=0.2)
     assert not rep["drifted"] and rep["action_taken"] == "appended"
     assert rep["psi"] < 0.2 and rep["n_new"] == 60 and rep["n_index"] == 120
     assert io.read("ann.vectors").count() == 180
@@ -1158,11 +1166,11 @@ def test_ivf_maintenance_appends_in_distribution_rebuilds_on_drift(
     ]
     out_df = spark.createDataFrame(out_rows, "vec_id long, embedding array<double>")
     # report-only first: measured, nothing folded, nothing rewritten
-    dry = SIM.ivf_maintenance(io, out_df, "ann", psi_threshold=0.2, action="report")
+    dry = maintain(out_df, psi_threshold=0.2, action="report")
     assert dry["drifted"] and dry["action_taken"] == "reported"
     assert io.read("ann.vectors").count() == 180
     old_cents = SIM.ivf_load_centroids(io, "ann")
-    rep2 = SIM.ivf_maintenance(io, out_df, "ann", psi_threshold=0.2)
+    rep2 = maintain(out_df, psi_threshold=0.2)
     assert rep2["drifted"] and rep2["action_taken"] == "rebuilt"
     assert rep2["psi"] >= 0.2
     assert io.read("ann.vectors").count() == 240

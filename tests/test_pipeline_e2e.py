@@ -1198,7 +1198,9 @@ def test_fingerprint_missing_key_reads_as_default(tmp_path):
     import json
 
     from data_quality_check_spark.pipeline.run import (
+        _FINGERPRINT_DEFAULTS,
         _check_output_schema_fingerprint,
+        output_schema_fingerprint,
     )
 
     ckpt = str(tmp_path / "ckpt")
@@ -1211,6 +1213,20 @@ def test_fingerprint_missing_key_reads_as_default(tmp_path):
         _check_output_schema_fingerprint(
             ckpt, FilterConfig(ppl_bucket_cuts={"en": [1.0, 2.0]})
         )
+    # the compat table covers exactly the facets the fingerprint stores
+    assert set(_FINGERPRINT_DEFAULTS) == set(output_schema_fingerprint(FilterConfig()))
+    # a key this code does not know, or a wrong-typed value, is refused by
+    # name — not reported as a config change
+    for stored, named in (
+        ({"split_labels": [], "assign_aspect_buckets": False, "future_facet": True},
+         "unknown key 'future_facet'"),
+        ({"split_labels": [], "assign_aspect_buckets": "no"},
+         "key 'assign_aspect_buckets' holds str, expected bool"),
+    ):
+        with open(os.path.join(ckpt, "output_schema.json"), "w") as f:
+            json.dump(stored, f)
+        with pytest.raises(ValueError, match=f"unreadable output-schema fingerprint.*{named}"):
+            _check_output_schema_fingerprint(ckpt, FilterConfig())
 
 
 def test_f1_gate_label_duplicates_and_contradictions(spark, tmp_path):

@@ -56,6 +56,32 @@ def test_profile_plan_is_jvm_only(spark):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_scores_plans_prune_unread_distinct_counts(spark):
+    """The shared metric aggregates include `nd__<c>` (an exact distinct count per
+    non-string column) for profile()'s column scores. The score plans never
+    read it, so column pruning must drop those aggregates through the
+    broadcast/inner joins: the score tables pay nothing for them."""
+    from data_quality_check_spark.plans.quality_scores import (
+        ScoreSpec,
+        grouped_scores_df,
+        metric_plan,
+        scores_df,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 2.0, "a", "2026-01-01")], "i int, x double, s string, d string"
+    )
+    spec = ScoreSpec.from_df(df, date_cols=["d"])
+
+    def optimized(plan_df) -> str:
+        return plan_df._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "nd__i" in optimized(metric_plan(df, spec))  # metric_plan emits it
+    assert "nd__" not in optimized(scores_df(df, spec))
+    gspec = ScoreSpec.from_df(df.drop("s"))
+    assert "nd__" not in optimized(grouped_scores_df(df, ["s"], gspec))
+
+
 def test_json_query_is_jvm_side_and_pruned(spark):
     """get_json_object + try_cast must stay in codegen (no Python eval node)
     and the scan must read only (event_type, props) of the 6 event columns."""

@@ -169,21 +169,75 @@ def test_profile_job_count(demo, spark):
     df.count()
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc.setJobGroup("profile-job-count", "fused profile")
-    profile(
-        df,
-        ProfileConfig(
-            email_columns=["email"],
-            phone_columns=["phone"],
-            date_columns=["created_at"],
-            custom_rules=[{"name": "r", "condition": "`age` < 200", "severity": "low"}],
-        ),
-    )
-    jobs = tracker.getJobIdsForGroup("profile-job-count") or []
-    sc.setJobGroup(None, None)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        profile(
+            df,
+            ProfileConfig(
+                email_columns=["email"],
+                phone_columns=["phone"],
+                date_columns=["created_at"],
+                custom_rules=[{"name": "r", "condition": "`age` < 200", "severity": "low"}],
+            ),
+        )
+        jobs = tracker.getJobIdsForGroup("profile-job-count") or []
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert len(jobs) <= 3, f"profile() ran {len(jobs)} jobs, expected ≤3"
+
+
+@pytest.mark.parametrize(
+    "table", ["demo", "customer", "lineitem", "events", "documents", "orders"]
+)
+def test_profile_and_scores_df_agree(demo, spark, sf_dir, table):
+    """profile() finishes the metric row with scoring.py's Python algebra,
+    scores_df with Spark expressions. On the spec profile() resolves (as_of =
+    its `now`) both read one metric row, so they must agree on every dimension
+    and the global score; only a .X5 tie may round differently (0.1)."""
+    import os
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    from data_quality_check_spark.entry_queries import _spec_overrides
+    from data_quality_check_spark.operators.profiler import profile_spec
+    from data_quality_check_spark.plans.quality_scores import scores_df
+
+    if table == "demo":
+        # `flag` has q1 == q3, so its IQR-fence outlier count must stay out of
+        # distribution on both sides
+        df = demo[1].withColumn("flag", (F.col("id") % 10 == 0).cast("int"))
+        cfg = ProfileConfig(
+            date_columns=["created_at"],
+            custom_rules=[
+                {"name": "age >= 0", "condition": "`age` >= 0", "column": "age"},
+                {"name": "bad", "condition": "no_such_col > 0"},  # skipped
+                {"name": "price cap", "condition": "`price` < 500", "column": "price"},
+            ],
+            correlation_rules=[{"col_a": "age", "col_b": "price", "operator": "<"}],
+        )
+    else:
+        path = os.path.join(os.path.dirname(sf_dir), "sf0.1", f"{table}.parquet")
+        if not os.path.exists(path):
+            pytest.skip(f"no sf0.1 {table} table next to {sf_dir}")
+        df = spark.read.parquet(path)
+        o = _spec_overrides(table)
+        cfg = ProfileConfig(
+            table_name=table,
+            date_columns=o.get("date_cols", []),
+            custom_rules=o.get("rules", []),
+        )
+    now = datetime(2026, 1, 1, 6, 30)
+    ts = profile(df, cfg, now=now).table_score
+    spec, _ = profile_spec(df, cfg, now)
+    got = scores_df(df, spec).collect()[0]
+    for dim in (*scoring.DIMENSIONS, "global_score"):
+        assert abs(getattr(ts, dim) - got[dim]) <= 0.1 + 1e-9, (
+            f"{table}.{dim}: profile {getattr(ts, dim)} vs scores_df {got[dim]}"
+        )
 
 
 def test_malformed_date_values_degrade_not_crash(spark):
@@ -265,24 +319,6 @@ def test_lang_guess_null_text_agrees_across_engines(spark):
         f"SELECT {lang_guess_sql('text')} FROM docs_null"
     ).fetchall()]
     assert got == want and got[0] == "und" and got[2] == "en"
-
-
-def test_min_numeric_rows_excludes_sparse_columns(spark):
-    import pandas as pd
-
-    from data_quality_check_spark.operators.profiler import ProfileConfig, profile
-
-    pdf = pd.DataFrame(
-        {
-            "dense": [float(i) for i in range(20)],
-            "sparse": [1.0, 2.0] + [None] * 18,  # 2 non-null
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    r = profile(df, ProfileConfig(min_numeric_rows=10))
-    assert "q1__dense" in r.metrics and "q1__sparse" not in r.metrics
-    everything = profile(df, ProfileConfig())  # default keeps all numeric cols
-    assert "q1__sparse" in everything.metrics
 
 
 def test_unnamed_custom_rule_with_violations_does_not_crash(spark):

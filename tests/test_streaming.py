@@ -327,6 +327,11 @@ def test_stream_corpus_dedup_against_seen_artifacts(spark, tmp_path):
         pa.Table.from_pandas(pdf.iloc[30:], schema=schema, preserve_index=False),
         str(landing / "part-001.parquet"),
     )
+    # the file source orders files by modification time, and two quick writes
+    # can share a millisecond mtime (ties fall back to directory-listing
+    # order): make batch 2's file strictly newer so batch 1 is read first
+    t0 = os.path.getmtime(landing / "part-000.parquet")
+    os.utime(landing / "part-001.parquet", (t0 + 1, t0 + 1))
 
     # baseline WITHOUT corpus dedup — the independent expectation source
     cfg = FilterConfig(num_buckets=4)
